@@ -11,8 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from weather_data_ingestion_gcp_spark.jobs import WeatherWarehouse
+from weather_data_ingestion_gcp_spark.operators.clean import clean_weather
 from weather_data_ingestion_gcp_spark.operators.rollup import daily_rollup
-from weather_data_ingestion_gcp_spark.schemas import WEATHER_SCHEMA
+from weather_data_ingestion_gcp_spark.schemas import RAW_API_SCHEMA, WEATHER_SCHEMA
 from weather_data_ingestion_gcp_spark.sources.landing import (
     ingest_once,
     read_landing,
@@ -53,6 +54,181 @@ def test_ingest_once_lands_one_clean_file(spark, tmp_path):
     row = back.collect()[0]
     assert row.coordinate.longitude == 87.07
     assert row.dt == dt.date(2022, 7, 3)
+
+
+def _ingest(spark, landing, payload, stamp="20220703-14:00:05"):
+    return ingest_once(
+        spark,
+        fetch=lambda: payload,
+        landing_dir=landing,
+        ingest_date=F.lit("2022-07-03").cast("date"),
+        ingest_time=F.lit("14:00:05"),
+        stamp=stamp,
+    )
+
+
+def test_ingest_once_lands_the_bytes_of_a_dataframe_clean(spark, tmp_path):
+    """The driver-local row path lands exactly what cleaning a
+    ``createDataFrame`` row and writing ``toJSON()`` lands."""
+    payloads = [
+        raw_api_payload(),
+        raw_api_payload(rain={"1h": 0.25, "3h": 1.5}, snow={"1h": 0.1, "3h": None}),
+        raw_api_payload(weather=[], visibility=None, name="Ā Bankura \"north\""),
+        raw_api_payload(main=dict(raw_api_payload()["main"], sea_level=1007, grnd_level=990)),
+    ]
+    for i, payload in enumerate(payloads):
+        path = _ingest(spark, str(tmp_path / "landing"), payload, stamp=f"20220703-14:00:0{i}")
+        kept = {k: v for k, v in payload.items() if k in RAW_API_SCHEMA.names}
+        expected = clean_weather(
+            spark.createDataFrame([kept], RAW_API_SCHEMA),
+            ingest_date=F.lit("2022-07-03").cast("date"),
+            ingest_time=F.lit("14:00:05"),
+        ).toJSON().collect()
+        with open(path) as f:
+            assert f.read() == expected[0] + "\n"
+
+
+def test_ingest_once_accepts_whole_numbers_in_double_fields(spark, tmp_path):
+    """OpenWeather sends e.g. ``"speed": 3``; a double field takes it."""
+    landing = str(tmp_path / "landing")
+    payload = raw_api_payload(
+        wind={"speed": 3, "deg": 210, "gust": None}, rain={"1h": 1, "3h": None}
+    )
+    payload["main"] = dict(payload["main"], temp=300)
+    path = _ingest(spark, landing, payload)
+    row = read_landing(spark, landing).collect()[0]
+    assert (row.wind.speed, row.main.temp, row.rain.rain_1h) == (3.0, 300.0, 1.0)
+    assert all(isinstance(v, float) for v in (row.wind.speed, row.main.temp, row.rain.rain_1h))
+    with open(path) as f:
+        assert '"speed":3.0' in f.read()
+
+
+@pytest.mark.parametrize(
+    "payload, failure",
+    [
+        (raw_api_payload(main=dict(raw_api_payload()["main"], temp="warm")),
+         r"(?s)MALFORMED_RECORD_IN_PARSING.*'warm'.*`temp`"),
+        (raw_api_payload(visibility=1.5), "MALFORMED_RECORD_IN_PARSING"),
+        ([raw_api_payload()], "not a JSON object: list"),
+        ("stations", "not a JSON object: str"),
+    ],
+    ids=["string-in-double", "fraction-in-long", "array", "string"],
+)
+def test_ingest_once_bad_payload_raises_value_error_and_lands_nothing(
+    spark, tmp_path, payload, failure
+):
+    landing = tmp_path / "landing"
+    with pytest.raises(ValueError, match=failure):
+        _ingest(spark, str(landing), payload)
+    assert not landing.exists() or os.listdir(landing) == []
+
+
+def _last_job_id(spark) -> int:
+    """Id of the newest job the status store knows. Job ids are handed out
+    in submission order and ``jobsList`` lists the newest first; the
+    listener bus is drained first so that every finished job is in."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(30_000)
+    jobs = sc.statusStore().jobsList(None)
+    return jobs.apply(0).jobId() if jobs.nonEmpty() else -1
+
+
+def _jobs_run(spark, fn) -> int:
+    assert not spark.streams.active  # a live stream would add its jobs
+    before = _last_job_id(spark)
+    fn()
+    return _last_job_id(spark) - before
+
+
+def test_hourly_path_job_floor(spark, tmp_path):
+    """The per-cycle fixed cost is a job count: pin it."""
+    assert _jobs_run(spark, lambda: _ingest(spark, str(tmp_path / "landing"), raw_api_payload())) == 0
+
+    wh = WeatherWarehouse(spark, str(tmp_path / "wh"))
+    wh.load_and_transform(spark.createDataFrame(hourly_rows(days=2), WEATHER_SCHEMA))
+    assert _jobs_run(spark, lambda: wh.log(log_type="api-logging", message_type="success")) == 1
+
+    one = spark.createDataFrame(
+        [dict(hourly_rows(days=2)[-1], current_time="23:30:05")], WEATHER_SCHEMA
+    )
+    # measured on Spark 4.1 with AQE: 3 for the counting pass (cache build,
+    # shuffle map, result), 1 append, 4 for the day-scoped refresh (2 of
+    # them the rollup's ORDER BY range exchange), 1 success log. The
+    # three-pass body it replaced ran 10.
+    assert _jobs_run(spark, lambda: wh.load_and_transform(one)) <= 9
+
+
+def _files(root) -> set[str]:
+    return {
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, fs in os.walk(root)
+        for f in fs
+        if not f.startswith((".", "_"))
+    }
+
+
+def test_empty_batch_writes_and_logs_nothing(spark, tmp_path):
+    landing = str(tmp_path / "landing")
+    os.makedirs(landing)
+    open(os.path.join(landing, "empty.json"), "w").close()
+    wh = WeatherWarehouse(spark, str(tmp_path / "wh"))
+    run_landing_stream(spark, landing, wh, str(tmp_path / "ckpt"))
+    wh.load_and_transform(spark.createDataFrame([], WEATHER_SCHEMA))
+    assert _files(tmp_path / "wh") == set()
+
+
+def _land_lines(landing: str, name: str, lines: list[str]) -> None:
+    os.makedirs(landing, exist_ok=True)
+    with open(os.path.join(landing, name), "w") as f:
+        f.write("\n".join(lines) + "\n")
+
+
+def test_all_corrupt_batch_quarantines_and_writes_nothing_else(spark, tmp_path):
+    wh = WeatherWarehouse(spark, str(tmp_path / "wh"))
+    wh.load_and_transform(spark.createDataFrame(hourly_rows(days=2), WEATHER_SCHEMA))
+    hourly_before = _files(tmp_path / "wh" / "hourly")
+    daily_before = _files(tmp_path / "wh" / "daily")
+    daily_rows = sorted(wh.read_daily().collect())
+
+    landing = str(tmp_path / "landing")
+    _land_lines(landing, "bad.json", ['{"not json', "[1, 2"])
+    wh.load_and_transform(read_landing(spark, landing))
+
+    errs = wh.read_logs().filter(F.col("message_type") == "error").collect()
+    assert [e.message for e in errs] == ["quarantined 2 corrupt row(s) (null dt)"]
+    assert wh.read_logs().filter(F.col("message_type") == "success").count() == 1
+    assert _files(tmp_path / "wh" / "hourly") == hourly_before
+    assert _files(tmp_path / "wh" / "daily") == daily_before
+    assert sorted(wh.read_daily().collect()) == daily_rows
+
+
+def test_mixed_batch_quarantines_and_refreshes_exactly_its_days(spark, tmp_path):
+    wh = WeatherWarehouse(spark, str(tmp_path / "wh"))
+    wh.load_and_transform(spark.createDataFrame(hourly_rows(days=2), WEATHER_SCHEMA))
+    daily_dir = tmp_path / "wh" / "daily"
+    day1_before = {f for f in _files(daily_dir) if "dt=2022-07-01" in f}
+    day2_before = {f for f in _files(daily_dir) if "dt=2022-07-02" in f}
+
+    rows = hourly_rows(days=3)
+    new = [dict(rows[30], current_time="12:30:05"), rows[-2]]  # 7/2 and 7/3
+    good = spark.createDataFrame(new, WEATHER_SCHEMA).toJSON().collect()
+    landing = str(tmp_path / "landing")
+    _land_lines(landing, "mixed.json", [good[0], '{"broken', good[1], "nope", "{]"])
+    wh.load_and_transform(read_landing(spark, landing))
+
+    errs = wh.read_logs().filter(F.col("message_type") == "error").collect()
+    assert [e.message for e in errs] == ["quarantined 3 corrupt row(s) (null dt)"]
+    ok = wh.read_logs().filter(F.col("message_type") == "success").collect()
+    assert sorted(r.message for r in ok) == ["loaded 2 day(s)", "loaded 2 day(s)"]
+    assert wh.read_hourly().count() == len(hourly_rows(days=2)) + 2
+    after = _files(daily_dir)
+    assert {f for f in after if "dt=2022-07-01" in f} == day1_before  # untouched
+    assert not {f for f in after if "dt=2022-07-02" in f} & day2_before  # rewritten
+    assert any("dt=2022-07-03" in f for f in after)
+    expected = {r.dt: r for r in daily_rollup(wh.read_hourly()).collect()}
+    assert {r.dt: r.asDict() for r in wh.read_daily().collect()} == {
+        d: r.asDict() for d, r in expected.items()
+    }
 
 
 def test_load_and_transform_and_idempotent_refresh(spark, tmp_path):

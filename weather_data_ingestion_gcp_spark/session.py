@@ -55,6 +55,26 @@ SCALE_CONFS: dict[str, str] = {
 }
 
 
+def default_cpus() -> int:
+    """Task slots of a local master: ``$SPARK_GRAFT_CPUS``, else the host's
+    CPU count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def default_driver_mem() -> str:
+    """Driver heap: ``$SPARK_GRAFT_DRIVER_MEM``, else half the host's
+    physical memory. In local mode the driver is the only JVM; the other
+    half is left to the Python workers and the OS."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows)
+        return "1g"  # Spark's own default
+    return f"{max(total // 2 >> 20, 1024)}m"
+
+
 def get_spark(
     app_name: str = "weather-data-ingestion-gcp-spark",
     master: str | None = None,
@@ -63,17 +83,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    for local runs; on a real cluster pass ``None`` with a pre-set master.
+    ``master`` defaults to ``local[default_cpus()]`` for local runs; on a
+    real cluster pass ``None`` with a pre-set master.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     builder = SparkSession.builder.appName(app_name)
     # local-mode driver == the only JVM: default 1g heap OOMs on the heavier
     # dedup joins; size it to the box (static conf — only effective for a
     # session we create ourselves).
-    builder = builder.config(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-    )
+    builder = builder.config("spark.driver.memory", default_driver_mem())
     if master is None and not os.environ.get("SPARK_MASTER"):
         master = f"local[{cpus}]"
     if master:
@@ -82,7 +100,7 @@ def get_spark(
         builder = builder.config(k, v)
     builder = builder.config(
         "spark.sql.shuffle.partitions",
-        str(shuffle_partitions if shuffle_partitions is not None else int(cpus)),
+        str(shuffle_partitions if shuffle_partitions is not None else cpus),
     )
     for k, v in (extra_confs or {}).items():
         builder = builder.config(k, v)
@@ -104,8 +122,7 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     # touches local masters; on a cluster the deployer's setting stands.
     try:
         if spark.sparkContext.master.startswith("local"):
-            cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-            spark.conf.set("spark.sql.shuffle.partitions", cpus)
+            spark.conf.set("spark.sql.shuffle.partitions", str(default_cpus()))
     except Exception:
         pass
     return spark

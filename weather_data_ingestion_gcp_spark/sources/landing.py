@@ -10,6 +10,17 @@ Pub/Sub + Cloud Functions event plumbing (SURVEY.md S7/T2).
 ``ingest_once`` is the S1 ingest function: fetch -> clean -> land. The HTTP
 fetch is injected (tests pass a fixture loader; production passes a
 ``requests`` call) — the engine never hard-codes an endpoint.
+
+Per-cycle job floor: the hourly cycle moves one observation, so its cost
+is Spark's fixed per-job cost, not data. ``spark.createDataFrame(list)``
+goes through ``sc.parallelize`` and a Python-worker task, and
+``toJSON().collect()`` runs a job on top of that. ``local_rows`` builds the
+row as a ``LocalRelation`` instead (a ``VALUES`` of JSON literals parsed by
+``from_json``), over which Catalyst folds the whole clean into a
+``LocalTableScan``: ``ingest_once`` runs **0** Spark jobs (1 before). With
+this and the fused counting pass in ``jobs.py``, a traced hourly cycle of
+the ``perfbench`` ``pipeline`` workload went from 12 jobs / 17 stages to
+9 / 14 (4 vCPUs, ``local[2]``).
 """
 
 from __future__ import annotations
@@ -20,11 +31,33 @@ import time
 import uuid
 from collections.abc import Callable
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.clean import clean_weather
 from ..schemas import RAW_API_SCHEMA, WEATHER_SCHEMA
 from .connectors import LocalDirObjectStore, ObjectStore
+
+
+def local_rows(spark: SparkSession, rows: list[dict], schema: StructType) -> DataFrame:
+    """Driver-local dicts (at least one) as a DataFrame that no Spark job
+    has to produce.
+
+    Each row is one JSON string literal in a ``VALUES`` relation, parsed by
+    ``from_json`` in FAILFAST mode: a value that does not fit ``schema``
+    (a string or a fraction in a long field) fails the query that reads it,
+    while a whole number in a double field is accepted, as JSON allows.
+    Keys not in ``schema`` are ignored.
+    """
+    marks = ", ".join(f"(:r{i})" for i in range(len(rows)))
+    args = {f"r{i}": json.dumps(r) for i, r in enumerate(rows)}
+    values = spark.sql(f"SELECT * FROM VALUES {marks} AS t(j)", args=args)
+    return values.select(
+        F.from_json("j", schema, {"mode": "FAILFAST"}).alias("r")
+    ).select("r.*")
 
 
 def write_landing_file(
@@ -55,7 +88,10 @@ def write_landing_file(
     # it, so the physical file uses a sanitized stamp
     stamp = stamp.replace(":", "")
     name = f"hourly-weather-data-json-{stamp}-{uuid.uuid4().hex[:8]}.json"
-    rows = cleaned.toJSON().collect()  # single observation batches: tiny
+    # single observation batches: tiny. to_json, not toJSON(): toJSON goes
+    # through an RDD and always runs a job; this collect over a local
+    # relation runs none
+    rows = [r[0] for r in cleaned.select(F.to_json(F.struct("*"))).collect()]
     return store.put(name, "\n".join(rows) + ("\n" if rows else ""))
 
 
@@ -67,18 +103,30 @@ def ingest_once(
     ingest_time=None,
     stamp: str | None = None,
 ) -> str:
-    """One reference ingest cycle: S1 fetch -> P1-P4 clean -> S4 land."""
+    """One reference ingest cycle: S1 fetch -> P1-P4 clean -> S4 land.
+
+    Fields the API sends beyond RAW_API_SCHEMA are dropped, as the
+    reference drops them by never reading them. A payload that is not a
+    JSON object, or whose values do not fit RAW_API_SCHEMA, raises
+    ``ValueError`` and lands nothing.
+    """
     payload = fetch()
-    raw = spark.createDataFrame([_conform(payload)], RAW_API_SCHEMA)
+    if not isinstance(payload, dict):
+        raise ValueError(
+            f"weather payload is not a JSON object: {type(payload).__name__}"
+        )
+    raw = local_rows(spark, [payload], RAW_API_SCHEMA)
     cleaned = clean_weather(raw, ingest_date=ingest_date, ingest_time=ingest_time)
-    return write_landing_file(spark, cleaned, landing_dir, stamp=stamp)
-
-
-def _conform(payload: dict) -> dict:
-    """Keep only RAW_API_SCHEMA fields (the API sends extras the reference
-    drops by never reading them)."""
-    names = {f.name for f in RAW_API_SCHEMA.fields}
-    return {k: v for k, v in payload.items() if k in names}
+    try:
+        # the parse runs in the collect, before anything is written
+        return write_landing_file(spark, cleaned, landing_dir, stamp=stamp)
+    except (PySparkException, Py4JJavaError) as exc:
+        # some FAILFAST sub-conditions reach Python as a bare Py4JJavaError
+        msg = (exc.java_exception.getMessage() if isinstance(exc, Py4JJavaError)
+               else str(exc))
+        if "MALFORMED_RECORD_IN_PARSING" not in msg:
+            raise
+        raise ValueError(f"weather payload does not fit RAW_API_SCHEMA: {msg}") from None
 
 
 def read_landing(spark: SparkSession, landing_dir: str) -> DataFrame:

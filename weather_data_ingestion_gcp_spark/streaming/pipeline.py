@@ -29,9 +29,9 @@ from ..sources.landing import stream_landing
 
 
 def _batch_processor(warehouse: WeatherWarehouse, dedup: bool):
+    # an empty batch is no special case here: load_and_transform's one
+    # counting pass finds no days and writes nothing
     def process(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         if dedup:
             batch = batch.dropDuplicates(["dt", "current_time", "name"])
         warehouse.load_and_transform(batch)
